@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage cuts for iterative operators (BFS layers, label propagation,
-  * BPE merge rounds, PQ training): each round's plan references the prior
-  * round's twice, so uncut lineage doubles per round and Catalyst chokes
-  * long before the data does.
+/** Lineage cuts for iterative operators (label propagation, BPE merge
+  * rounds, PQ training, interface-embedding closure): each round's plan
+  * references the prior round's twice, so uncut lineage doubles per round
+  * and Catalyst chokes long before the data does.
   *
   * By default the cut is `localCheckpoint` — blocks held on executors
   * without replication. That is the right local-mode/dev trade (no
@@ -14,9 +14,10 @@ import org.apache.spark.sql.DataFrame
   * whole iterative query dies. Deployments set [[DirConf]]
   * (`spark.graft.checkpointDir`) to a reliable store (HDFS/object-store
   * path) and every cut becomes a fault-tolerant `checkpoint()` there —
-  * the same switch a 1000-executor BFS over the 100 TB edge table needs,
-  * where a multi-hour query restart costs more than the checkpoint
-  * writes. Read per cut, so a conf change applies from the next round on.
+  * the same switch a 1000-executor label propagation over a 100 TB pair
+  * graph needs, where a multi-hour query restart costs more than the
+  * checkpoint writes. Read per cut, so a conf change applies from the
+  * next round on.
   */
 object Checkpoints {
   /** When set (runtime-settable), lineage cuts write reliable checkpoints

@@ -31,7 +31,7 @@ object PlanCache {
     * it just doesn't become the memo. */
   private val epoch = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The epoch to snapshot at the START of a multi-layer build (BFS) and
+  /** The epoch to snapshot at the START of a multi-layer build and
     * thread through every chained [[getOrBuildAt]] install. */
   def currentEpoch: Long = epoch.get()
 
@@ -40,9 +40,9 @@ object PlanCache {
     getOrBuildAt(spark, dir, tag, epoch.get())(build)
 
   /** [[getOrBuild]] whose install AND lookup checks compare against a
-    * CALLER-supplied epoch snapshot. A chained build (BFS layer h+1 built
-    * from the local DataFrame of layer h) must pass the snapshot taken
-    * before layer 1:
+    * CALLER-supplied epoch snapshot. A chained build (layer h+1 memoized
+    * separately but built from the local DataFrame of layer h) must pass
+    * the snapshot taken before layer 1:
     *
     *  - Install side: with a per-call snapshot, an invalidate landing
     *    between layers suppresses layer h's install but NOT layer
@@ -108,8 +108,8 @@ object PlanCache {
       try h(dir) catch { case _: Throwable => () }
     }
 
-  /** Remove and unpersist ONE entry (e.g. per-query BFS layers released
-    * after their output is materialized). No-op if absent. */
+  /** Remove and unpersist ONE entry, so its next use rebuilds. No-op if
+    * absent. */
   def drop(spark: SparkSession, dir: String, tag: String): Unit = {
     val e = cache.remove((spark, dir, tag))
     if (e != null) { try e.df.unpersist() catch { case _: Throwable => () } }

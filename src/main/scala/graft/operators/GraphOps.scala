@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.Tables
 import graft.Checkpoints.LineageCut
 
@@ -12,10 +15,13 @@ import graft.Checkpoints.LineageCut
   * traversals over edge tables — callers/callees, dependencies, impact
   * (internal/graph/searcher_sql.go:34, depth capped at 6).
   *
-  * Scale posture: BFS is a fixed number of self-joins on the edge table
-  * (depth is bounded, as in cortex), each a shuffle on the frontier key
-  * with distinct() collapsing the frontier between hops — never an
-  * unbounded recursion, and the frontier stays a thin (id) relation.
+  * Scale posture: every traversal (k-hop, dependents, callers/callees,
+  * implementations, path finding) runs one kernel, [[traverse]]: the
+  * frontier, visited set and parent map live on the driver, and each hop
+  * (depth is bounded, as in cortex) is one narrow job — a distributed
+  * scan of the persisted edge relation filtered by the frontier. Driver
+  * memory grows with the nodes reached, which is what [[kHop]] returns
+  * anyway; the edge relation itself never leaves the executors.
   */
 object GraphOps {
 
@@ -65,168 +71,165 @@ object GraphOps {
   /** Depth cap, as in the reference (searcher_sql.go:44 MaxDepth = 6). */
   val MaxDepth = 6
 
-  /** Bounded-depth BFS over a typed adjacency list `adj(f_t, f_id, t_t,
-    * t_id)` from `seeds(t, id)`: per hop, expand the frontier through the
-    * adjacency, `distinct()` the new frontier, and left-anti-subtract the
-    * visited set so every node surfaces at its MINIMUM hop exactly once —
-    * the reference's recursive-CTE traversal re-expressed as `depth`
-    * self-joins (internal/graph/searcher_sql.go:146-156 recursive CTE with
-    * visited-dedup).
+  /** A node of the typed graph: (type, id). */
+  private type Node = (String, Long)
+
+  /** Parent tie-break: the smallest (type, id), the order of
+    * `min(struct(type, id))`. */
+  private val nodeOrd: Ordering[Node] = Ordering.Tuple2[String, Long]
+
+  /** The bounded-depth traversal every BFS operator here runs — the
+    * reference's recursive-CTE traversal with visited-dedup
+    * (internal/graph/searcher_sql.go:146-156) run as a driver loop.
+    * `adj(f_t, f_id, t_t, t_id)` is a typed adjacency over a persisted
+    * edge memo; the seeds are the `f` nodes of the rows matching `seeds`.
+    * Returns every node reached within `depth` hops with its MINIMUM hop
+    * and, at that hop, its smallest (type, id) parent, in (hop, node)
+    * order. Stops early once the frontier is empty or `target` is
+    * reached.
     *
-    * Scale posture: the frontier and visited set are thin (type, id)
-    * relations; each hop is one shuffle join on the frontier key. Frontiers
-    * persist so hop h doesn't re-derive hops 1..h-1 (lineage would double
-    * per level otherwise) — and every public BFS operator memoizes its
-    * OUTPUT through PlanCache, so the per-hop frontier caches are created
-    * at most once per (session, dir, op) rather than accumulating on every
-    * invocation; a cluster deployment would checkpoint frontiers instead.
+    * Scale posture: the frontier, the visited set and the parent map live
+    * on the driver, so driver memory grows with the nodes reached — what
+    * [[kHop]] returns anyway — plus one hop's outgoing edges. Each hop's
+    * expansion is ONE narrow Spark job: a distributed scan of the
+    * persisted edge relation filtered by the frontier (an IN-set the
+    * in-memory scan also prunes batches with), collecting the edges that
+    * leave the frontier. No shuffle, no per-hop cache, no lineage to cut:
+    * a traversal costs at most `depth` jobs.
     */
-  private def typedBfs(spark: SparkSession, dir: String, tag: String,
-      adj: DataFrame, seeds: DataFrame, depth: Int, asOf: Long): DataFrame = {
+  private[graft] def traverse(adj: DataFrame, seeds: Column, depth: Int,
+      target: Option[Node] = None): Seq[(Node, (Int, Node))] = {
     require(depth >= 1 && depth <= MaxDepth, s"depth must be in [1, $MaxDepth]")
-    var visited = seeds
-    var frontier = seeds
-    var out: DataFrame = null
-    for (h <- 1 to depth) {
-      // frontier persists route through PlanCache (not a bare .persist())
-      // so invalidate() releases them along with the memoized BFS output
-      // instead of pinning executor storage for the session lifetime.
-      // Layer installs all compare against `asOf` — the epoch snapshot the
-      // OUTERMOST query took before layer 1 — because layer h+1 is built
-      // from the local hop-h DataFrame: an invalidate landing mid-BFS must
-      // suppress every later layer's install too, or the next query would
-      // recombine fresh early layers with stale cached late ones.
-      // localCheckpoint TRUNCATES THE LINEAGE: without it, layer h's
-      // logical plan contains every prior layer twice (frontier + visited
-      // chain), so the plan tree doubles per hop — at depth 6 Catalyst
-      // chokes on the 2^6 tree before a single task runs. A cluster
-      // deployment would use reliable checkpoint() for the same reason.
-      val next = graft.PlanCache.getOrBuildAt(spark, dir, s"$tag:frontier$h",
-          asOf) {
-        adj
-          .join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
-            Seq("f_t", "f_id"))
-          .select(col("t_t").as("t"), col("t_id").as("id")).distinct()
-          .join(visited, Seq("t", "id"), "left_anti")
-          .lineageCut
-      }
-      val hopRows = next.select(lit(h).as("hop"), col("t").as("node_type"),
-        col("id").as("node_id"))
-      out = if (out == null) hopRows else out.unionAll(hopRows)
-      visited = visited.unionAll(next)
-      frontier = next
+    val visited = mutable.HashSet.empty[Node]
+    val reached = mutable.ArrayBuffer.empty[(Node, (Int, Node))]
+    var frontier = Option(seeds)
+    for (h <- 1 to depth; hop <- frontier) {
+      val out = adj.filter(hop)
+        .select(col("f_t"), col("f_id"), col("t_t"), col("t_id")).collect()
+        .map(r => ((r.getString(0), r.getLong(1)), (r.getString(2), r.getLong(3))))
+      if (h == 1) visited ++= out.iterator.map(_._1)
+      val next = mutable.HashMap.empty[Node, Node]
+      for ((f, t) <- out if !visited.contains(t))
+        next(t) = next.get(t).fold(f)(nodeOrd.min(_, f))
+      visited ++= next.keys
+      reached ++= next.toSeq.sortBy(_._1)(nodeOrd).map { case (n, p) => n -> (h, p) }
+      frontier =
+        if (next.isEmpty || target.exists(next.contains)) None
+        else Some(next.keys.groupBy(_._1).map { case (t, ns) =>
+          col("f_t") === t && col("f_id").isInCollection(ns.map(_._2))
+        }.reduce(_ || _))
     }
-    out
+    reached.toSeq
   }
 
+  /** The (step, node) walk from the traversal's seed to `n`, read back
+    * through the parent map; empty when `n` was not reached. */
+  private def walkTo(reached: Seq[(Node, (Int, Node))], n: Node): Seq[(Int, Node)] = {
+    val parent = reached.toMap
+    parent.get(n).fold(Seq.empty[(Int, Node)]) { case (h, _) =>
+      Iterator.iterate(n)(parent(_)._2).take(h + 1).toSeq.reverse.zipWithIndex
+        .map { case (node, step) => (step, node) }
+    }
+  }
+
+  private def schema(hopCol: String): StructType = StructType(Seq(
+    StructField(hopCol, IntegerType, nullable = false),
+    StructField("node_type", StringType, nullable = false),
+    StructField("node_id", LongType, nullable = true)))
+
+  /** Memoize a traversal's driver rows. The build runs every hop inside
+    * PlanCache's epoch snapshot, so an invalidation that lands
+    * mid-traversal keeps the result out of the memo. The rows are cut into
+    * executor blocks: a memo hit then plans a scan of blocks, not a local
+    * relation whose every row Spark re-plans and re-compares per query. */
+  private def memoRows(spark: SparkSession, dir: String, tag: String,
+      hopCol: String)(rows: => Seq[(Int, Node)]): DataFrame =
+    graft.PlanCache.getOrBuild(spark, dir, tag) {
+      spark.createDataFrame(
+        rows.map { case (h, (t, id)) => Row(h, t, id) }.asJava, schema(hopCol))
+        .lineageCut
+    }
+
+  /** A BFS operator's (hop, node_type, node_id) rows. */
+  private def bfs(spark: SparkSession, dir: String, tag: String,
+      adj: => DataFrame, seeds: Column, depth: Int): DataFrame =
+    memoRows(spark, dir, tag, "hop") {
+      traverse(adj, seeds, depth).map { case (n, (h, _)) => (h, n) }
+    }
+
+  /** One direction of an edge relation as typed adjacency rows. */
+  private def arcs(rel: DataFrame, fromT: String, from: String, toT: String,
+      to: String): DataFrame =
+    rel.select(lit(fromT).as("f_t"), col(from).as("f_id"),
+      lit(toT).as("t_t"), col(to).as("t_id"))
+
   /** Undirected typed adjacency of the supplier↔part graph. */
-  private def partAdj(e: DataFrame): DataFrame =
-    e.select(lit("supplier").as("f_t"), col("src").as("f_id"),
-        lit("part").as("t_t"), col("dst").as("t_id"))
-      .unionAll(e.select(lit("part").as("f_t"), col("dst").as("f_id"),
-        lit("supplier").as("t_t"), col("src").as("t_id")))
+  private[graft] def partAdj(spark: SparkSession, dir: String): DataFrame = {
+    val e = edges(spark, dir)
+    arcs(e, "supplier", "src", "part", "dst")
+      .unionAll(arcs(e, "part", "dst", "supplier", "src"))
+  }
 
   /** Undirected typed adjacency of the customer↔supplier "uses" graph. */
-  private def usesAdj(u: DataFrame): DataFrame =
-    u.select(lit("customer").as("f_t"), col("cust").as("f_id"),
-        lit("supplier").as("t_t"), col("supp").as("t_id"))
-      .unionAll(u.select(lit("supplier").as("f_t"), col("supp").as("f_id"),
-        lit("customer").as("t_t"), col("cust").as("t_id")))
+  private def usesAdj(spark: SparkSession, dir: String): DataFrame = {
+    val u = usesEdges(spark, dir)
+    arcs(u, "customer", "cust", "supplier", "supp")
+      .unionAll(arcs(u, "supplier", "supp", "customer", "cust"))
+  }
+
+  private def seedsOf(t: String, below: Long): Column =
+    col("f_t") === t && col("f_id") < below
 
   /** Depth-parameterized k-hop reachability from the seed suppliers over
     * the supplier↔part graph (cortex `dependencies` at arbitrary depth <=
     * MaxDepth, searcher_sql.go:44). Each node appears once, at its minimum
     * hop. */
-  def kHop(spark: SparkSession, dir: String, depth: Int): DataFrame = {
-    require(depth >= 1 && depth <= MaxDepth, s"depth must be in [1, $MaxDepth]")
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, s"bfs:khop:$depth", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("src") < SeedMax)
-        .select(lit("supplier").as("t"), col("src").as("id")).distinct()
-      typedBfs(spark, dir, s"bfs:khop:$depth", partAdj(e), seeds, depth, e0)
-    }
-  }
+  def kHop(spark: SparkSession, dir: String, depth: Int): DataFrame =
+    bfs(spark, dir, s"bfs:khop:$depth", partAdj(spark, dir),
+      seedsOf("supplier", SeedMax), depth)
 
   /** The depth-4 contract row for the parameterized traversal. */
   def graphKhopDeep(spark: SparkSession, dir: String): DataFrame =
     kHop(spark, dir, 4)
 
+  /** Bounded-depth (2-hop) reachability from the seed suppliers:
+    * hop 1 = parts they ship, hop 2 = other suppliers shipping those
+    * parts (cortex `dependencies`/`path` queries, searcher_sql.go). */
+  def graphKhop(spark: SparkSession, dir: String): DataFrame =
+    kHop(spark, dir, 2)
+
   /** Reverse-direction traversal over the `uses` relation (cortex
     * `dependents`, searcher_types.go): hop 1 = customers depending on the
     * seed suppliers, hop 2 = other suppliers those customers also use. */
-  def graphDependents(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:dependents", e0) {
-      val u = usesEdges(spark, dir)
-      val seeds = u.filter(col("supp") < SeedMax)
-        .select(lit("supplier").as("t"), col("supp").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:dependents", usesAdj(u), seeds, 2, e0)
-    }
-  }
+  def graphDependents(spark: SparkSession, dir: String): DataFrame =
+    bfs(spark, dir, "bfs:dependents", usesAdj(spark, dir),
+      seedsOf("supplier", SeedMax), 2)
 
   /** Direct neighbors — the cortex `callers`/`callees` operations
     * (searcher_types.go): depth-1 directed traversal. `callees` follows
     * the edge direction from supplier seeds (parts they ship); `callers`
     * reverses it from part seeds (suppliers shipping them). Both are the
-    * depth-1 specialization of the same typed BFS the deep traversals
+    * depth-1 specialization of the same traversal the deep operators
     * use; they carry no separate `queries` row because graph_khop /
     * graph_implementations already oracle-check the identical hop-1
-    * plans. */
-  def graphCallees(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:callees", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("src") < SeedMax)
-        .select(lit("supplier").as("t"), col("src").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:callees",
-        e.select(lit("supplier").as("f_t"), col("src").as("f_id"),
-          lit("part").as("t_t"), col("dst").as("t_id")), seeds, 1, e0)
-    }
-  }
+    * rows. */
+  def graphCallees(spark: SparkSession, dir: String): DataFrame =
+    bfs(spark, dir, "bfs:callees",
+      arcs(edges(spark, dir), "supplier", "src", "part", "dst"),
+      seedsOf("supplier", SeedMax), 1)
 
-  def graphCallers(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:callers", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("dst") < 40)
-        .select(lit("part").as("t"), col("dst").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:callers",
-        e.select(lit("part").as("f_t"), col("dst").as("f_id"),
-          lit("supplier").as("t_t"), col("src").as("t_id")), seeds, 1, e0)
-    }
-  }
+  def graphCallers(spark: SparkSession, dir: String): DataFrame =
+    bfs(spark, dir, "bfs:callers",
+      arcs(edges(spark, dir), "part", "dst", "supplier", "src"),
+      seedsOf("part", 40), 1)
 
   /** `implementations` / `type-usages` analogue over the second direction
     * of the supplier↔part relation: seed parts are the "interfaces", hop 1
     * = suppliers implementing (shipping) them, hop 2 = the other parts
     * those suppliers also ship (the usage closure). */
-  def graphImplementations(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:implementations", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("dst") < 40)
-        .select(lit("part").as("t"), col("dst").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:implementations", partAdj(e), seeds, 2, e0)
-    }
-  }
-
-  /** Bounded-depth (2-hop) reachability from the seed suppliers:
-    * hop 1 = parts they ship, hop 2 = other suppliers shipping those
-    * parts (cortex `dependencies`/`path` queries, searcher_sql.go).
-    */
-  def graphKhop(spark: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.getOrBuild(spark, dir, "graph:khop2") {
-      val e = edges(spark, dir)
-      val hop1 = e.filter(col("src") < SeedMax)
-        .select(col("dst")).distinct()
-      val hop2 = e.join(hop1, "dst")
-        .filter(col("src") >= SeedMax)
-        .select(col("src")).distinct()
-      hop1.select(lit(1).as("hop"), lit("part").as("node_type"), col("dst").as("node_id"))
-        .unionAll(hop2.select(lit(2).as("hop"), lit("supplier").as("node_type"),
-          col("src").as("node_id")))
-    }
+  def graphImplementations(spark: SparkSession, dir: String): DataFrame =
+    bfs(spark, dir, "bfs:implementations", partAdj(spark, dir),
+      seedsOf("part", 40), 2)
 
   /** Impact radius per seed root: how many distinct other suppliers are
     * reachable in 2 hops (cortex `impact` metric). The two edge scans
@@ -264,28 +267,18 @@ object GraphOps {
   /** BFS path FINDING — the reference's `path` operation returns an
     * actual node sequence between two nodes (internal/graph TestBFSPath),
     * not just counts. Deterministic construction: BFS from supplier 0
-    * with a MIN-parent recorded per node at its first hop, target = the
-    * smallest other supplier (first reached at hop 2 — in this dense
+    * with the min parent recorded per node at its first hop, target =
+    * the smallest other supplier (first reached at hop 2 — in this dense
     * bipartite graph hop 2 already closes the supplier set from any
-    * seed), path recovered by joining back through the parent pointers —
-    * joins end to end, no collect, and the min-parent tie-break makes
-    * the chosen path unique so it verifies row-for-row.
+    * seed), path read back through the parent map; the min-parent
+    * tie-break makes the chosen path unique so it verifies row-for-row.
     */
   def graphPathFind(spark: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.getOrBuild(spark, dir, "bfs:pathfind") {
-      val e = edges(spark, dir)
-      val l1 = e.filter(col("src") === 0)
-        .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
-      val l2 = e.join(l1.select(col("id").as("dst")), "dst")
-        .filter(col("src") =!= 0)
-        .groupBy(col("src").as("id")).agg(min(col("dst")).as("parent"))
-      val t = l2.orderBy(col("id")).limit(1)
-        .select(col("id").as("t_id"), col("parent").as("t_par"))
-      val b1 = t.join(l1, col("t_par") === col("id"))
-        .select(col("t_id"), col("id").as("p1"))
-      b1.select(lit(0).as("step"), lit("supplier").as("node_type"), lit(0L).as("node_id"))
-        .unionAll(b1.select(lit(1), lit("part"), col("p1")))
-        .unionAll(b1.select(lit(2), lit("supplier"), col("t_id")))
+    memoRows(spark, dir, "bfs:pathfind", "step") {
+      val reached = traverse(partAdj(spark, dir),
+        col("f_t") === "supplier" && col("f_id") === 0L, 2)
+      reached.collectFirst { case (n @ ("supplier", _), (2, _)) => n }
+        .fold(Seq.empty[(Int, Node)])(walkTo(reached, _))
     }
 
   /** Third edge relation: customer→part "orders" edges (customer c calls
@@ -307,89 +300,28 @@ object GraphOps {
   /** Arbitrary-endpoint shortest path over the supplier↔part graph — the
     * reference's `path` operation takes any (from, to) pair and BFSes the
     * reachable subgraph up to the depth cap
-    * (internal/graph/searcher_sql.go:270 queryPath + bfsPath:185). Layered
-    * BFS with a MIN-parent recorded per node at its first (= minimum) hop,
-    * so the recovered path is unique and verifies row-for-row; backtrack
-    * is a chain of ≤ maxDepth single-row joins through the parent
-    * pointers — joins end to end, no collect.
+    * (internal/graph/searcher_sql.go:270 queryPath + bfsPath:185). The
+    * shared [[traverse]] kernel records the min parent per node at its
+    * first (= minimum) hop, so the recovered path is unique and verifies
+    * row-for-row; the traversal stops at the hop that reaches dst.
     *
-    * Scale posture: each BFS layer is one shuffle join on a thin typed
-    * frontier with min-parent aggregation, layers persist through
-    * PlanCache exactly like [[typedBfs]]; the backtrack joins touch one
-    * row per step. Depth is capped at [[MaxDepth]] as in the reference.
-    * Returns (step, node_type, node_id) from src (step 0) to dst; empty
-    * when dst is unreachable within maxDepth — the reference's "No path
-    * found" response.
+    * Scale posture: at most maxDepth narrow jobs, the path read from the
+    * driver-held parent map; the memo holds only the path itself (≤
+    * maxDepth+1 rows), so a deployment answering many distinct path
+    * queries pins no per-query edge state. Depth is capped at
+    * [[MaxDepth]] as in the reference. Returns (step, node_type,
+    * node_id) from src (step 0) to dst; empty when dst is unreachable
+    * within maxDepth — the reference's "No path found" response — and
+    * when src == dst.
     */
   def pathFind(spark: SparkSession, dir: String, srcType: String, srcId: Long,
-      dstType: String, dstId: Long, maxDepth: Int): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= MaxDepth,
-      s"maxDepth must be in [1, $MaxDepth]")
-    val tag = s"bfs:path:$srcType:$srcId:$dstType:$dstId:$maxDepth"
-    // one epoch snapshot for the whole layered build (see typedBfs)
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, tag, e0) {
-      val adj = partAdj(edges(spark, dir))
-      val seeds = spark.range(1)
-        .select(lit(srcType).as("t"), lit(srcId).as("id"))
-      var visited = seeds
-      var frontier = seeds
-      var reached: DataFrame = null
-      for (h <- 1 to maxDepth) {
-        // localCheckpoint truncates the per-layer lineage (see typedBfs):
-        // the backtrack below references `reached` once per step, so an
-        // uncut plan would repeat the exponential layer tree ~20×
-        val next = graft.PlanCache.getOrBuildAt(spark, dir, s"$tag:layer$h",
-            e0) {
-          adj
-            .join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
-              Seq("f_t", "f_id"))
-            // min-parent tie-break: parent = smallest (type, id) among the
-            // frontier nodes reaching this node at its minimum hop
-            .groupBy(col("t_t").as("t"), col("t_id").as("id"))
-            .agg(min(struct(col("f_t"), col("f_id"))).as("p"))
-            .select(col("t"), col("id"),
-              col("p.f_t").as("parent_t"), col("p.f_id").as("parent_id"))
-            .join(visited, Seq("t", "id"), "left_anti")
-            .lineageCut
-        }
-        val hopRows = next.select(lit(h).as("hop"), col("t"), col("id"),
-          col("parent_t"), col("parent_id"))
-        reached = if (reached == null) hopRows else reached.unionAll(hopRows)
-        visited = visited.unionAll(next.select(col("t"), col("id")))
-        frontier = next.select(col("t"), col("id"))
-      }
-      // backtrack: walk the parent chain from dst — each hop joins ONE row
-      val dst = reached.filter(col("t") === dstType && col("id") === dstId)
-      var path = dst.select(col("hop").as("step"), col("t").as("node_type"),
-        col("id").as("node_id"))
-      var cur = dst
-      for (_ <- 2 to maxDepth) {
-        val up = cur.select(col("hop").as("c_hop"),
-          col("parent_t").as("c_pt"), col("parent_id").as("c_pid"))
-        cur = reached.join(up,
-          col("hop") === col("c_hop") - 1 &&
-            col("t") === col("c_pt") && col("id") === col("c_pid"))
-          .select(col("hop"), col("t"), col("id"),
-            col("parent_t"), col("parent_id"))
-        path = path.unionAll(cur.select(col("hop").as("step"),
-          col("t").as("node_type"), col("id").as("node_id")))
-      }
-      // the src row, emitted only if dst was reached at all
-      val full = path.unionAll(dst.select(lit(0).as("step"),
-        lit(srcType).as("node_type"), lit(srcId).as("node_id")))
-      // materialize the (≤ maxDepth+1 row) result eagerly, then RELEASE
-      // the per-layer caches: unlike the fixed-name BFS ops (one tag per
-      // (session, dir, op)), this key space is per-(src, dst, depth) —
-      // a deployment answering many distinct path queries would pin
-      // maxDepth persisted layers each and grow executor storage without
-      // bound. After the cut, the memo holds only the tiny path itself.
-      val out = full.lineageCut
-      for (h <- 1 to maxDepth)
-        graft.PlanCache.drop(spark, dir, s"$tag:layer$h")
-      out
+      dstType: String, dstId: Long, maxDepth: Int): DataFrame =
+    memoRows(spark, dir,
+        s"bfs:path:$srcType:$srcId:$dstType:$dstId:$maxDepth", "step") {
+      val dst = (dstType, dstId)
+      walkTo(traverse(partAdj(spark, dir),
+        col("f_t") === srcType && col("f_id") === srcId, maxDepth, Some(dst)), dst)
     }
-  }
 
   /** Contract row: shortest path supplier 0 → part 37 at the full depth
     * cap. Part 37 sits at BFS distance exactly 3 from supplier 0 in the

@@ -155,6 +155,11 @@ object WatchLoop {
               fresh.write.mode("append").format("parquet").saveAsTable(tbl)
               totalEdges.addAndGet(n)
               appended = n
+              // the append ran in the stream's cloned session, whose
+              // catalog re-lists the table's files; the serving session
+              // resolves the table through its own relation cache, which
+              // would keep the pre-append file listing
+              spark.catalog.refreshTable(tbl)
               graft.PlanCache.invalidate(dir)
             }
           } finally { fresh.unpersist(); () }
